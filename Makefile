@@ -5,7 +5,7 @@ SF_DIR ?= /root/testdata/sf0.1
 ORACLE_SF ?= /root/testdata/sf0.01
 KAFKA_BOOTSTRAP ?= localhost:9092
 
-.PHONY: test oracle bench kafka-live
+.PHONY: test oracle bench perf kafka-live
 
 test:
 	python -m pytest tests/ -x -q
@@ -15,6 +15,13 @@ oracle:
 
 bench:
 	SPARK_GRAFT_SF_DIR=$(SF_DIR) python bench.py
+
+# The repo benchmark (BENCHMARK.json): perfbench unit tests, then one
+# untraced run of each workload.
+perf:
+	python3 -m pytest perfbench/test_perfbench.py -q
+	python3 perfbench/run.py --workload stream_dgim --seed 1 --seconds 18
+	python3 perfbench/run.py --workload batch_mixed --seed 1 --seconds 18
 
 # Live-broker Kafka round-trip (docs/KAFKA_RUNBOOK.md): requires a
 # reachable broker AND the spark-sql-kafka connector jar.  The same

@@ -50,6 +50,8 @@ from __future__ import annotations
 
 from typing import Iterable, List, Sequence, Tuple
 
+import numpy as np
+
 MODE_JAVA = "java"
 MODE_PYFLINK = "pyflink"
 _MODES = (MODE_JAVA, MODE_PYFLINK)
@@ -128,10 +130,12 @@ class DGIM:
         self._expire(self.latest_ts)
 
     def bulk_add_ones(self, ts_sorted: Sequence[int]) -> None:
-        """Add many 1-bits at once, ``ts_sorted`` ascending — the
-        closed-form batch path for the streaming processors (VERDICT
-        r12 ask #3), bit-identical to calling :meth:`add` per element
-        (property-tested in tests/test_dgim.py).
+        """Add many 1-bits at once — the closed-form batch path for
+        the streaming processors (VERDICT r12 ask #3), bit-identical to
+        calling :meth:`add` per element in the given order
+        (property-tested in tests/test_dgim_bulk.py).  The closed form
+        needs ``ts_sorted`` ascending; any other order takes the
+        sequential path.
 
         Derivation: with no expiry, the compaction cascade maintains
         the unique ZEROLESS BINARY representation of the total 1-bit
@@ -146,11 +150,13 @@ class DGIM:
         boundary falls in the old range, else the new timestamp at
         that position.  O(log n) per batch instead of O(n·log²n).
 
-        Falls back to the exact sequential loop whenever the closed
-        form's preconditions do not hold: out-of-order arrival
-        (min new ts < latest_ts), possible expiry (timestamp spread
-        reaching window_size), or a state whose sizes are not the
-        zeroless representation (i.e. it has already seen expiry)."""
+        Falls back to the exact sequential loop, in the given order,
+        whenever the closed form's preconditions do not hold: input
+        that is not ascending (checked with one vectorized diff),
+        out-of-order arrival (min new ts < latest_ts), possible expiry
+        (timestamp spread reaching window_size), or a state whose
+        sizes are not the zeroless representation (i.e. it has
+        already seen expiry)."""
         n_new = len(ts_sorted)
         if n_new == 0:
             return
@@ -159,7 +165,8 @@ class DGIM:
         n0 = sum(bk[1] for bk in b)
         oldest = self._min_ts if self._min_ts is not None else t_min
         if (
-            (b and t_min < self.latest_ts)
+            (np.diff(np.asarray(ts_sorted)) < 0).any()
+            or (b and t_min < self.latest_ts)
             or max(self.latest_ts, t_max) - min(oldest, t_min)
             >= self.window_size
             or [bk[1] for bk in reversed(b)] != _zeroless_sizes(n0)

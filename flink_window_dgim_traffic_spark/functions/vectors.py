@@ -4,7 +4,8 @@ Everything is built from JVM-side higher-order functions
 (``zip_with`` / ``aggregate``) — no Python UDF in the hot path.  The
 folds are **sequential left folds**, which makes the float arithmetic
 deterministic and bit-identical to the DuckDB oracle's
-``list_reduce`` twin (same op order, same IEEE semantics).
+``list_reduce`` twin in ``registry/sqlc.py`` (same op order, same
+IEEE semantics).
 """
 
 from __future__ import annotations
@@ -36,21 +37,3 @@ def sq_norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(sq_norm(a)) * F.sqrt(sq_norm(b)))
-
-
-# DuckDB twins of the expressions above, for oracle SQL construction.
-def duck_dot(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_transform(list_zip({a}, {b}), s -> s[1] * s[2]), "
-        f"(x, y) -> x + y)"
-    )
-
-
-def duck_sq_norm(a: str) -> str:
-    return f"list_reduce(list_transform({a}, x -> x * x), (x, y) -> x + y)"
-
-
-def duck_cosine(a: str, b: str) -> str:
-    return (
-        f"({duck_dot(a, b)} / (sqrt({duck_sq_norm(a)}) * sqrt({duck_sq_norm(b)})))"
-    )

@@ -381,24 +381,6 @@ def _minhash_wide(
     )
 
 
-def minhash_signatures(documents: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
-    """(doc_id, perm, minhash): seeded xxhash64 per shingle per
-    permutation, min-reduced per doc.  All JVM-side.
-
-    Column-wise formulation: ``num_perm`` min-aggregate columns over
-    the shingle rows, instead of exploding shingles × permutations
-    into rows — map-side partial ``min`` means the shuffle carries one
-    ``num_perm``-wide row per doc, not |shingles|×num_perm rows.  The
-    per-row (perm) shape is restored afterwards from doc-sized data."""
-    mins = _minhash_wide(documents, num_perm)
-    return mins.select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"h{i}") for i in range(num_perm)])).alias(
-            "perm", "minhash"
-        ),
-    )
-
-
 def minhash_lsh_pairs(
     documents: DataFrame,
     threshold: float = 0.8,

@@ -82,11 +82,11 @@ def decode_media(payload: bytes, mime: str):
     decoder would hand back for these formats.
 
     ``image/png`` dispatches to the stdlib-zlib :func:`decode_png`
-    (r10); ``image/jpeg`` to the numpy baseline-sequential
-    :func:`decode_jpeg` (r11).  Other mimes (progressive JPEG,
-    compressed audio) still raise NotImplementedError — the
-    documented codec boundary (reference has no media at all; this
-    surface is north-star scope)."""
+    (r10); ``image/jpeg`` to the numpy :func:`decode_jpeg` (baseline
+    sequential since r11, progressive SOF2 since r12).  Any other mime
+    (audio goes through :func:`decode_audio`) raises
+    NotImplementedError — the documented codec boundary (reference has
+    no media at all; this surface is north-star scope)."""
     if mime == PNG_MIME:
         return decode_png(payload)
     if mime == JPEG_MIME:
@@ -1835,10 +1835,11 @@ def media_png_ahash_pairs(
 #
 # Scope: SEQUENTIAL baseline DCT (SOF0), 8-bit, grayscale or YCbCr
 # 4:4:4, standard ITU T.81 Annex K Huffman tables, optional restart
-# intervals.  Progressive (SOF2) and chroma subsampling raise
-# NotImplementedError — the documented codec boundary, mirroring the
-# r10 PNG discipline (real bitstream walk, deterministic synthetic
-# fixtures, closed-form pixel oracles, fuzz vs truncation).
+# intervals (r12 added chroma subsampling and progressive SOF2; see
+# decode_jpeg for the remaining NotImplementedError boundary),
+# mirroring the r10 PNG discipline (real bitstream walk,
+# deterministic synthetic fixtures, closed-form pixel oracles, fuzz
+# vs truncation).
 #
 # The FIXTURES use all-ones quantization tables and rasters that are
 # FLAT PER 8x8 BLOCK: a flat block's DCT is DC-only with an exactly
@@ -1966,25 +1967,6 @@ def _huff_encoder_table(spec):
         for length in range(1, 17):
             for _ in range(bits[length - 1]):
                 table[vals[k]] = (code, length)
-                code += 1
-                k += 1
-            code <<= 1
-        _JPG_CACHE[key] = table
-    return table
-
-
-def _huff_decoder_table(spec):
-    """DHT spec -> {(length, code): symbol} (cached; kept for the
-    slow-path/spec-parity readers and tests — the decode hot path
-    uses :func:`_huff_decoder_lut`)."""
-    key = ("dec", tuple(spec[0]), tuple(spec[1]))
-    table = _JPG_CACHE.get(key)
-    if table is None:
-        bits, vals = spec
-        table, code, k = {}, 0, 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                table[(length, code)] = vals[k]
                 code += 1
                 k += 1
             code <<= 1
@@ -2901,11 +2883,12 @@ def decode_jpeg(payload: bytes):
     BATCHED over all blocks (two broadcast matmuls).  Measured ≈5×
     on the fixture corpus vs the r11 per-bit/per-block loop.
 
-    Raises ValueError on structural corruption (bad SOI, truncation,
-    unknown Huffman code, marker inside entropy data) and
-    NotImplementedError on the documented scope boundary: progressive
-    (SOF2), 12-bit, arithmetic coding, sampling shapes other than
-    4:4:4 / 4:2:0 / 4:2:2 / 4:4:0."""
+    Progressive (SOF2) frames decode scan by scan (r12, see
+    :func:`_jpg_prog_init`).  Raises ValueError on structural
+    corruption (bad SOI, truncation, unknown Huffman code, marker
+    inside entropy data) and NotImplementedError on the documented
+    scope boundary: 12-bit, arithmetic/lossless/hierarchical coding,
+    sampling shapes other than 4:4:4 / 4:2:0 / 4:2:2 / 4:4:0."""
     import struct
 
     import numpy as np

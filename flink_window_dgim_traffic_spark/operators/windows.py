@@ -23,11 +23,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from flink_window_dgim_traffic_spark.dgim import DGIM, MODE_JAVA
+from flink_window_dgim_traffic_spark.dgim import DGIM, MODE_JAVA, MODE_PYFLINK
 
 # Spark datetime pattern ↔ strftime used for golden/oracle string output
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -214,21 +214,23 @@ def hop_dgim(
 # ----------------------------------------------------------------------
 # DGIM fast path: the DGIM_ESTIMATE → g(sum(bit)) logical rewrite
 # ----------------------------------------------------------------------
-def _count_est_udf(mode: str):
-    """Arrow-batched lookup ``ones → g(ones)`` (dgim.count_estimate_table)."""
-
-    @pandas_udf("bigint")
-    def g(ones: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from flink_window_dgim_traffic_spark.dgim import count_estimate_table
-
-        n = ones.fillna(0).to_numpy(dtype="int64")
-        hi = int(n.max()) if len(n) else 0
-        tab = np.asarray(count_estimate_table(hi, mode), dtype="int64")
-        return pd.Series(tab[n])
-
-    return g
+def count_estimate_col(col: Column, mode: str = MODE_JAVA) -> Column:
+    """JVM expression of :func:`dgim.count_estimate_closed`: ``ones →
+    g(ones)`` in exact 64-bit integer arithmetic, with no Python
+    worker in the plan.  ``pw = 2^(floor(log2(n+1)) - 1)`` is the
+    oldest bucket of the zeroless binary representation of ``n``,
+    computed as ``1 << (length(bin(n + 1)) - 2)``; java mode halves it
+    rounding up (which also covers the single-bucket ``n = 1`` case),
+    pyflink mode rounding down.  Null and non-positive counts map to
+    0."""
+    if mode not in (MODE_JAVA, MODE_PYFLINK):
+        raise ValueError(f"mode must be {MODE_JAVA!r} or {MODE_PYFLINK!r}")
+    n = F.coalesce(col.cast("bigint"), F.lit(0).cast("bigint"))
+    pw = F.call_function(
+        "shiftleft", F.lit(1).cast("bigint"), F.length(F.bin(n + 1)) - 2
+    )
+    half = F.shiftright(pw + 1 if mode == MODE_JAVA else pw, 1)
+    return F.when(n <= 0, F.lit(0).cast("bigint")).otherwise(n - pw + half)
 
 
 def tumble_dgim_fast(
@@ -241,17 +243,17 @@ def tumble_dgim_fast(
     the 1-bit count ⇒ ``DGIM_ESTIMATE ≡ g(sum(bit))``.
 
     The whole plan is JVM-side (scan → map-side partial sum → shuffle
-    of tiny (window, count) pairs → final sum); Python is one memoized
-    table lookup per output row.  Result is *identical* to
-    :func:`tumble_dgim` replay (asserted in tests), at exact-count
-    cost — the 100 TB shape for this query family."""
+    of tiny (window, count) pairs → final sum → the integer closed form
+    :func:`count_estimate_col`), with no Python worker.  Result is
+    *identical* to :func:`tumble_dgim` replay (asserted in tests), at
+    exact-count cost — the 100 TB shape for this query family."""
     return (
         with_bit(events)
         .groupBy(F.window("ts", f"{size_sec} seconds").alias("w"))
         .agg(F.sum("bit").cast("bigint").alias("exact_count"))
         .select(
             F.date_format(F.col("w.end"), TS_FMT_SPARK).alias("window_end"),
-            _count_est_udf(mode)(F.col("exact_count")).alias("count_estimate"),
+            count_estimate_col(F.col("exact_count"), mode).alias("count_estimate"),
             "exact_count",
         )
     )
@@ -271,15 +273,15 @@ def tumble_dgim_bound(
     (see :func:`tumble_dgim_fast`); the DuckDB oracle recomputes it
     from the *closed form* (``dgim.count_estimate_closed``), so the
     hash check anchors the estimate VALUES of the whole DGIM family
-    against an independent engine: oracle ⇔ closed form ⇔ memoized
-    table (property test) ⇔ sketch replay (equality tests) ⇔ the
+    against an independent engine: oracle ⇔ closed form ⇔ JVM
+    expression and memoized table (property tests) ⇔ sketch replay (equality tests) ⇔ the
     two-phase merge path (bound tests).
 
     ``rel_err`` is a single IEEE-754 division of two exact integers
     (no rounding step — bit-identical across engines, unlike
     ``round(x, 6)`` whose HALF_UP/HALF_EVEN difference bites exactly
     when ``exact`` is a power of two)."""
-    est = _count_est_udf(mode)(F.col("exact_count"))
+    est = count_estimate_col(F.col("exact_count"), mode)
     return (
         with_bit(events)
         .groupBy(F.window("ts", f"{size_sec} seconds").alias("w"))
@@ -321,7 +323,7 @@ def tumble_dgim_by_user_fast(
         .select(
             F.date_format(F.col("w.end"), TS_FMT_SPARK).alias("window_end"),
             "user_id",
-            _count_est_udf(mode)(F.col("exact_count")).alias("count_estimate"),
+            count_estimate_col(F.col("exact_count"), mode).alias("count_estimate"),
             "exact_count",
         )
     )
@@ -346,7 +348,7 @@ def hop_dgim_fast(
         .select(
             F.date_format(F.col("w.start"), TS_FMT_SPARK).alias("window_start"),
             F.date_format(F.col("w.end"), TS_FMT_SPARK).alias("window_end"),
-            _count_est_udf(mode)(F.col("exact_count")).alias("count_estimate"),
+            count_estimate_col(F.col("exact_count"), mode).alias("count_estimate"),
             "exact_count",
         )
     )
@@ -748,7 +750,7 @@ def hop_dgim_bound(
     oracle can recompute the VALUE independently — this converts the
     hop-DGIM estimate from rows-only to hash-anchored.  Same
     ``rel_err`` no-rounding discipline as the tumble twin."""
-    est = _count_est_udf(mode)(F.col("exact_count"))
+    est = count_estimate_col(F.col("exact_count"), mode)
     return (
         with_bit(events)
         .groupBy(
@@ -814,7 +816,7 @@ def cumulate_dgim_bound(
         (ws + F.lit(max_size_sec)).cast("bigint"),
         F.lit(step_sec).cast("bigint"),
     )
-    est = _count_est_udf(mode)(F.col("exact_count"))
+    est = count_estimate_col(F.col("exact_count"), mode)
     return (
         e.select("bit", ws.alias("ws"), F.explode(ends).alias("we"))
         .groupBy("ws", "we")
@@ -1942,7 +1944,7 @@ def session_dgim(
     give a DIFFERENT (smaller) answer under a horizon=gap_sec sketch;
     that variant is intentionally not what this operator computes.
     Plan shape: one session-window aggregation (map-side
-    partial), Python only as the memoized g() lookup per output row.
+    partial), then the JVM closed form ``count_estimate_col``.
 
     Output: (user_id, session_start, session_end_plus_gap,
     count_estimate, exact_count, n_rows) — session bounds formatted
@@ -1966,7 +1968,7 @@ def session_dgim(
             F.date_format("w.end", TS_FMT_SPARK).alias(
                 "session_end_plus_gap"
             ),
-            _count_est_udf(mode)(F.col("exact_count")).alias(
+            count_estimate_col(F.col("exact_count"), mode).alias(
                 "count_estimate"
             ),
             "exact_count",

@@ -18,13 +18,6 @@ _DOT = (
 _SQN = "list_reduce(list_transform({a}, x -> x * x), (x, y) -> x + y)"
 
 
-def _cos(a: str, b: str) -> str:
-    return (
-        f"({_DOT.format(a=a, b=b)} / "
-        f"(sqrt({_SQN.format(a=a)}) * sqrt({_SQN.format(a=b)})))"
-    )
-
-
 def _tumble_sql(size: int) -> str:
     return f"""
 WITH e AS (SELECT CAST(event_id % 2 AS INT) AS bit, ts FROM events),

@@ -365,15 +365,13 @@ def session_dgim_stream(
     sessions equal the batch operator; state stays bounded by active
     sessions via the watermark."""
     from flink_window_dgim_traffic_spark.operators.windows import (
-        _count_est_udf,
+        count_estimate_col,
     )
 
     base = session_exact_stream(parsed, gap_sec, watermark, key_cols)
     return base.select(
         *base.columns[:-2],
-        _count_est_udf("java")(F.col("ones_exact")).alias(
-            "count_estimate"
-        ),
+        count_estimate_col(F.col("ones_exact")).alias("count_estimate"),
         F.col("ones_exact").alias("exact_count"),
         "n_rows",
     )

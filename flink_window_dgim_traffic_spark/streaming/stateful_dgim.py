@@ -1,19 +1,31 @@
-"""Incremental streaming DGIM via ``applyInPandasWithState`` — the
-bounded-state alternative to per-window replay (SURVEY.md §7.3).
+"""Streaming DGIM per event-time window, three ways.
 
-The reference keeps one DGIM accumulator per open window inside
-Flink's window operator (``DGIMAggregateFunction.java:41-71``); here
-the sketch lives in the Spark state store keyed by window end, updated
-once per micro-batch and emitted in update mode.  State per key is the
-flattened bucket list — O(log² N), exactly the bound the sketch
-exists for.
+- :func:`tumble_dgim_stream` / :func:`hop_dgim_stream` — the
+  reference's tumbling and sliding jobs as NATIVE Spark streaming
+  aggregations.  With the sketch horizon equal to the window length
+  no bucket can expire inside a window, so the DGIM estimate is the
+  closed form ``g(ones)`` of the window's 1-bit count (the
+  ``DGIM_ESTIMATE → g(sum(bit))`` rewrite of SURVEY.md §4, the same
+  one batch ``tumble_dgim_fast`` uses).  The state store keeps one
+  (ones, rows) pair per open window in the JVM, the estimate is the
+  integer expression ``windows.count_estimate_col``, and no Python
+  worker runs.  A watermark evicts closed windows; a late row still
+  counts while its window's state exists, and is dropped once an
+  earlier micro-batch has evicted it — the rule of
+  ``jobs.tumble_exact_stream`` and of Flink's window operator.
+- :func:`cumulate_dgim_stream` — one DGIM sketch per open cumulative
+  window via ``applyInPandasWithState``, the flattened O(log² N)
+  bucket list as state (the reference's per-window accumulator,
+  ``DGIMAggregateFunction.java:41-71``).
+- The ``transformWithStateInPandas`` processors (:class:`DGIMProcessor`
+  and its evicting, hopping and session siblings) — the same sketch
+  state on Spark 4's StatefulProcessor API.
 """
 
 from __future__ import annotations
 
 import os
 from datetime import timezone
-from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql.streaming import StatefulProcessor
@@ -22,6 +34,10 @@ from flink_window_dgim_traffic_spark.dgim import (
     DGIM,
     MODE_JAVA,
     count_estimate_closed,
+)
+from flink_window_dgim_traffic_spark.operators.windows import (
+    TS_FMT_SPARK,
+    count_estimate_col,
 )
 
 STATE_SCHEMA = "flat array<bigint>"
@@ -46,63 +62,37 @@ OUTPUT_SCHEMA = (
 )
 
 
-def make_dgim_update_fn(size_sec: int, mode: str = MODE_JAVA, evict: bool = False):
-    """Build the applyInPandasWithState update function (importable at
-    module scope so cloudpickle ships only the closure config).
+def _window_dgim_agg(parsed, durations, labels, mode, watermark):
+    """The native tumble/hop shape: ``window(ts, *durations)`` groups,
+    (ones, rows) per window in the state store, one ``window_<label>``
+    string column per window field in ``labels``, then the closed-form
+    estimate.  ``exact_count`` counts only bits equal to 1, the bits
+    the sketch's insert path takes."""
+    from pyspark.sql import functions as F
 
-    With ``evict=True`` (requires a watermark + EventTimeTimeout) the
-    state for a window is dropped once the event-time watermark passes
-    its end: per-key state is O(log² N) by the sketch, and eviction
-    makes TOTAL state O(open windows) instead of O(all windows ever) —
-    the difference between bounded and unbounded state at 100 TB."""
-
-    def update(
-        key: Tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state,
-    ) -> Iterator[pd.DataFrame]:
-        if evict and state.hasTimedOut:
-            # watermark passed window end: final value was already
-            # emitted in update mode; just drop the state
-            state.remove()
-            return
-        if state.exists:
-            (flat, ones, nrows) = state.get
-            sk = DGIM.from_flat(size_sec, list(flat), mode=mode)
-        else:
-            sk, ones, nrows = DGIM(size_sec, mode=mode), 0, 0
-        # sort ONCE across the whole group iterator: a key's batch
-        # rows can span multiple Arrow chunks, and per-chunk sorting
-        # would feed the (order-sensitive) sketch out of time order
-        frames = [pdf for pdf in pdfs]
-        sub = (
-            pd.concat(frames).sort_values("ts_sec", kind="mergesort")
-            if frames
-            else pd.DataFrame({"bit": [], "ts_sec": []})
+    src = (
+        parsed.withWatermark("ts", watermark)
+        if watermark is not None
+        else parsed
+    )
+    return (
+        src.groupBy(F.window("ts", *durations).alias("w"))
+        .agg(
+            F.sum((F.col("bit") == 1).cast("bigint")).alias("exact_count"),
+            F.count(F.lit(1)).alias("n_rows"),
         )
-        ones += _bulk_update(sk, sub)
-        nrows += len(sub)
-        state.update((sk.to_flat(), ones, nrows))
-        # The grouping key arrives as a NAIVE datetime in the Spark
-        # session timezone (UTC per session.py).  Derive BOTH the
-        # timeout epoch and the window label from the same explicit
-        # naive-as-UTC reading — `.timestamp()` on a naive datetime
-        # would instead apply the HOST timezone, shifting eviction by
-        # the UTC offset on non-UTC hosts.
-        we_utc = key[0].replace(tzinfo=timezone.utc)
-        if evict:
-            # drop state once the watermark reaches the window end
-            state.setTimeoutTimestamp(int(we_utc.timestamp() * 1000))
-        yield pd.DataFrame(
-            {
-                "window_end": [we_utc.strftime("%Y-%m-%d %H:%M:%S")],
-                "count_estimate": [sk.estimate()],
-                "exact_count": [ones],
-                "n_rows": [nrows],
-            }
+        .select(
+            *[
+                F.date_format(f"w.{f}", TS_FMT_SPARK).alias(f"window_{f}")
+                for f in labels
+            ],
+            count_estimate_col(F.col("exact_count"), mode).alias(
+                "count_estimate"
+            ),
+            "exact_count",
+            "n_rows",
         )
-
-    return update
+    )
 
 
 def tumble_dgim_stream(
@@ -112,31 +102,16 @@ def tumble_dgim_stream(
     watermark: str | None = None,
 ):
     """Update-mode streaming DGIM per tumbling window (the reference's
-    Java tumbling + PyFlink jobs).  Input must be ``parse_traffic``
-    output (bit, ts, ts_sec).
+    Java tumbling + PyFlink jobs) as a native streaming aggregation:
+    (ones, rows) per window in the state store, estimate ``g(ones)``
+    (see the module docstring).  Input must be ``parse_traffic``
+    output (bit, ts).
 
-    With ``watermark`` set, window state is EVICTED once the watermark
-    passes the window end (EventTimeTimeout) — total state bounded by
-    open windows."""
-    from pyspark.sql import functions as F
-
-    evict = watermark is not None
-    src = parsed.withWatermark("ts", watermark) if evict else parsed
-    # keep the watermarked ts column itself: EventTimeTimeout requires
-    # the event-time attribute to reach the stateful operator
-    extra = ("ts",) if evict else ()
-    keyed = src.select(
-        F.window("ts", f"{size_sec} seconds").getItem("end").alias("we"),
-        "bit",
-        "ts_sec",
-        *extra,
-    )
-    return keyed.groupBy("we").applyInPandasWithState(
-        make_dgim_update_fn(size_sec, mode, evict=evict),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA + ", ones bigint, nrows bigint",
-        outputMode="update",
-        timeoutConf="EventTimeTimeout" if evict else "NoTimeout",
+    With ``watermark`` set, a window's state is EVICTED once the
+    watermark passes its end — total state bounded by open windows —
+    and rows for an already evicted window are dropped."""
+    return _window_dgim_agg(
+        parsed, [f"{size_sec} seconds"], ["end"], mode, watermark
     )
 
 
@@ -478,7 +453,7 @@ class DGIMProcessor(StatefulProcessor):
             sk = DGIM.from_flat(self._size_sec, list(flat), mode=self._mode)
         else:
             sk, ones, nrows = DGIM(self._size_sec, mode=self._mode), 0, 0
-        # same cross-chunk sort discipline as make_dgim_update_fn
+        # same cross-chunk sort discipline as make_hop_dgim_update_fn
         frames = [pdf for pdf in rows]
         sub = (
             pd.concat(frames).sort_values("ts_sec", kind="mergesort")
@@ -505,9 +480,9 @@ class EvictingDGIMProcessor(StatefulProcessor):
     """Tumbling DGIM on TWS with EVENT-TIME TIMERS (r10): every
     update re-registers a timer at the window end, and
     ``handleExpiredTimer`` drops the window's state once the
-    watermark passes — the TWS-native form of the
-    applyInPandasWithState eviction path (``EventTimeTimeout``),
-    making TOTAL state O(open windows).  The final value was already
+    watermark passes — the TWS-native form of the watermark eviction
+    of :func:`tumble_dgim_stream`, making TOTAL state O(open
+    windows).  The final value was already
     emitted in update mode, so expiry yields nothing."""
 
     def __init__(self, size_sec: int, mode: str = MODE_JAVA) -> None:
@@ -535,7 +510,7 @@ class EvictingDGIMProcessor(StatefulProcessor):
         ones += _bulk_update(sk, sub)
         nrows += len(sub)
         self._st.update((sk.to_flat(), ones, nrows))
-        # naive-as-UTC key reading (see make_dgim_update_fn): drop
+        # naive-as-UTC key reading (see make_hop_dgim_update_fn): drop
         # this window's state once the watermark reaches its end
         we_utc = key[0].replace(tzinfo=timezone.utc)
         self._handle.registerTimer(int(we_utc.timestamp() * 1000))
@@ -637,8 +612,8 @@ def hop_dgim_stream_tws(
 ):
     """Sliding-window DGIM on the real ``transformWithStateInPandas``
     runtime: the native ``window(ts, size, slide)`` generator fans
-    each row to its covering windows (exactly as the
-    applyInPandasWithState twin :func:`hop_dgim_stream`) and the
+    each row to its covering windows (exactly as the native
+    aggregation twin :func:`hop_dgim_stream`) and the
     composite (window_start, window_end) key addresses one sketch per
     window instance — exercising multi-column TWS grouping keys.
     Requirements as :func:`tumble_dgim_stream_tws` (RocksDB provider
@@ -668,10 +643,10 @@ def hop_dgim_stream_tws(
 
 
 def tumble_dgim_stream_tws(parsed, size_sec: int = 60, mode: str = MODE_JAVA):
-    """Same incremental tumbling DGIM as :func:`tumble_dgim_stream`,
-    on the current-generation ``transformWithStateInPandas`` API.
-    Kept alongside the applyInPandasWithState path so both stateful
-    APIs stay exercised; outputs are tested identical.
+    """Incremental tumbling DGIM with the sketch itself as state, on
+    the current-generation ``transformWithStateInPandas`` API.  Its
+    outputs are tested identical to the native aggregation
+    :func:`tumble_dgim_stream`.
 
     Runtime requirements (both satisfied in CI since r10, so the
     end-to-end branch of tests/test_streaming.py actually executes):
@@ -711,9 +686,15 @@ HOP_OUTPUT_SCHEMA = (
 def make_hop_dgim_update_fn(
     size_sec: int, mode: str = MODE_JAVA, evict: bool = False
 ):
-    """Like :func:`make_dgim_update_fn` but keyed by (window_start,
-    window_end) — the composite upsert key of the reference's sliding
-    job (``SlidingWindowStreamingJob.java:72-74``)."""
+    """Build the applyInPandasWithState update function of
+    :func:`cumulate_dgim_stream` (importable at module scope so
+    cloudpickle ships only the closure config), keyed by
+    (window_start, window_end).
+
+    With ``evict=True`` (requires a watermark + EventTimeTimeout) the
+    state for a window is dropped once the event-time watermark passes
+    its end: per-key state is O(log² N) by the sketch, and eviction
+    makes TOTAL state O(open windows)."""
 
     def update(key, pdfs, state):
         if evict and state.hasTimedOut:
@@ -736,9 +717,11 @@ def make_hop_dgim_update_fn(
         ones += _bulk_update(sk, sub)
         nrows += len(sub)
         state.update((sk.to_flat(), ones, nrows))
-        # Same naive-as-UTC reading as the tumble twin above:
-        # `.timestamp()` on the naive key would apply the HOST
-        # timezone and shift eviction by the UTC offset.
+        # The grouping key arrives as a NAIVE datetime in the Spark
+        # session timezone (UTC per session.py).  Derive the timeout
+        # epoch from an explicit naive-as-UTC reading: `.timestamp()`
+        # on the naive key would apply the HOST timezone and shift
+        # eviction by the UTC offset.
         we_utc = key[1].replace(tzinfo=timezone.utc)
         if evict:
             state.setTimeoutTimestamp(int(we_utc.timestamp() * 1000))
@@ -824,33 +807,16 @@ def hop_dgim_stream(
 ):
     """Update-mode streaming DGIM per hopping window — the reference's
     sliding job (``SlidingWindowStreamingJob.java:92-111``) as a
-    stateful stream.  Each record updates size/slide window states;
-    state per key stays O(log² N).  With ``watermark`` set, a
-    window's state is evicted once the watermark passes its end
-    (same EventTimeTimeout pattern as the tumbling job)."""
-    from pyspark.sql import functions as F
-
-    evict = watermark is not None
-    src = parsed.withWatermark("ts", watermark) if evict else parsed
-    extra = ("ts",) if evict else ()
-    keyed = src.select(
-        F.window("ts", f"{size_sec} seconds", f"{slide_sec} seconds").alias("w"),
-        "bit",
-        "ts_sec",
-        *extra,
-    ).select(
-        F.col("w.start").alias("ws"),
-        F.col("w.end").alias("we"),
-        "bit",
-        "ts_sec",
-        *extra,
-    )
-    return keyed.groupBy("ws", "we").applyInPandasWithState(
-        make_hop_dgim_update_fn(size_sec, mode, evict=evict),
-        outputStructType=HOP_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA + ", ones bigint, nrows bigint",
-        outputMode="update",
-        timeoutConf="EventTimeTimeout" if evict else "NoTimeout",
+    native streaming aggregation keyed by (window_start, window_end),
+    the reference's composite upsert key.  Each record updates
+    size/slide windows; eviction and late rows follow
+    :func:`tumble_dgim_stream`."""
+    return _window_dgim_agg(
+        parsed,
+        [f"{size_sec} seconds", f"{slide_sec} seconds"],
+        ["start", "end"],
+        mode,
+        watermark,
     )
 
 

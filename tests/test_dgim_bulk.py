@@ -163,3 +163,26 @@ def test_bulk_empty_batch_is_noop():
     before = _state(sk)
     sk.bulk_add_ones([])
     assert _state(sk) == before
+
+
+def test_bulk_unsorted_batch_takes_sequential_path():
+    # the closed form assumes ascending input; an unsorted batch must
+    # be detected and replayed in the given order (before the check,
+    # this case estimated 2 where sequential replay gives 1)
+    batch = [50, 5, 20]
+    a, b = _replay([batch], 30), _bulk([batch], 30)
+    assert a.estimate() == 1
+    assert b.estimate() == 1
+    assert _state(a) == _state(b)
+
+
+@settings(max_examples=200, deadline=None, derandomize=True)
+@given(
+    st.lists(st.integers(min_value=0, max_value=200), min_size=1, max_size=60),
+    st.integers(min_value=1, max_value=300),
+    st.sampled_from([MODE_JAVA, MODE_PYFLINK]),
+)
+def test_bulk_equals_sequential_on_unsorted_batches(ts_list, window, mode):
+    a, b = _replay([ts_list], window, mode), _bulk([ts_list], window, mode)
+    assert _state(a) == _state(b)
+    assert a.estimate() == b.estimate()

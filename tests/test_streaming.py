@@ -405,6 +405,96 @@ def test_stateful_hop_dgim_eviction(spark, fixture_dir, batch_parsed):
     assert state_rows < len(expect)
 
 
+def _late_row_fixture(path) -> str:
+    """Three replay files, 10 s watermark in mind: 1-bits at 0, 5, ...,
+    50 s; then {30 s, 80 s}; then {20 s, 85 s}.  The 30 s and 20 s rows
+    arrive after the watermark has passed their timestamps but while
+    their window [00:00, 00:01) is still open."""
+    import json
+    import os
+
+    os.makedirs(path)
+    chunks = [list(range(0, 55, 5)), [30, 80], [20, 85]]
+    for i, secs in enumerate(chunks):
+        fp = os.path.join(path, f"chunk_{i:04d}.json")
+        with open(fp, "w") as f:
+            for t in secs:
+                ts = f"2024-05-01T00:{t // 60:02d}:{t % 60:02d}.000000"
+                f.write(json.dumps({"value": "1", "timestamp": ts}) + "\n")
+        os.utime(fp, (1_700_000_000 + i, 1_700_000_000 + i))
+    return path
+
+
+def test_stateful_dgim_late_rows_follow_exact_twin(spark, tmp_path):
+    """Late rows: the DGIM stream keeps exactly the rows the exact
+    tumble stream keeps (a row counts until its window has closed), and
+    every emitted estimate is the closed form of its exact count."""
+    from flink_window_dgim_traffic_spark.dgim import count_estimate_closed
+
+    src = _late_row_fixture(str(tmp_path / "late"))
+
+    def final(df, name, count_col):
+        J.run_stream_to_memory(df, name, "update")
+        rows = spark.sql(f"SELECT * FROM {name}").collect()
+        return rows, {
+            r["window_end"]: (r[count_col], r["n_rows"]) for r in rows
+        }
+
+    dgim_rows, dgim = final(
+        tumble_dgim_stream(
+            J.parse_traffic(J.file_traffic_stream(spark, src)),
+            60,
+            watermark="10 seconds",
+        ),
+        "t_dgim_late",
+        "exact_count",
+    )
+    _, exact = final(
+        J.tumble_exact_stream(
+            J.parse_traffic(J.file_traffic_stream(spark, src)),
+            60,
+            watermark="10 seconds",
+        ),
+        "t_exact_late",
+        "ones_exact",
+    )
+    assert dgim == exact
+    assert dgim["2024-05-01 00:01:00"] == (13, 13)
+    for r in dgim_rows:
+        assert r["count_estimate"] == count_estimate_closed(r["exact_count"])
+
+
+def test_dgim_window_plans_run_no_python(spark, events, fixture_dir):
+    """The tumble and hop DGIM jobs, batch and streaming, are native
+    aggregations plus a JVM expression: no Python operator in the
+    plan."""
+    from flink_window_dgim_traffic_spark.plans.inspect import plan_text
+    from flink_window_dgim_traffic_spark.streaming.stateful_dgim import (
+        hop_dgim_stream,
+    )
+
+    stream = J.parse_traffic(J.file_traffic_stream(spark, fixture_dir))
+    plans = {
+        "tumble_dgim_stream": tumble_dgim_stream(
+            stream, 60, watermark="10 seconds"
+        ),
+        "hop_dgim_stream": hop_dgim_stream(
+            stream, 60, 10, watermark="10 seconds"
+        ),
+        "tumble_dgim_fast": W.tumble_dgim_fast(events),
+        "hop_dgim_fast": W.hop_dgim_fast(events, 60, 10),
+    }
+    for name, df in plans.items():
+        text = plan_text(df, "extended")
+        assert "Aggregate" in text, name
+        for node in (
+            "FlatMapGroupsInPandasWithState",
+            "ArrowEvalPython",
+            "BatchEvalPython",
+        ):
+            assert node not in text, f"{name}: {node}"
+
+
 # ----------------------------------------------------------------------
 # Kafka seams, broker-free (S1/S6): the decode projection and the
 # connector options are the parts of kafka_traffic_stream that carry

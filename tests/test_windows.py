@@ -106,6 +106,35 @@ def test_hop_dgim_fast_identical_to_replay(events):
     assert fast == replay
 
 
+def test_count_estimate_col_equals_closed_form(spark):
+    """The JVM expression behind every ``*_dgim_fast``/``*_bound`` and
+    the native streaming jobs equals ``dgim.count_estimate_closed`` in
+    both modes: densely for small counts, and at every power-of-two
+    edge (2^k - 1, 2^k, 2^k + 1) up to k = 61, where the oldest bucket
+    changes size.  Null maps to 0."""
+    from pyspark.sql import functions as F
+
+    from flink_window_dgim_traffic_spark.dgim import count_estimate_closed
+
+    edges = sorted(
+        {(1 << k) + d for k in range(62) for d in (-1, 0, 1)} - set(range(5001))
+    )
+    ns = spark.createDataFrame(
+        [(n,) for n in range(5001)] + [(n,) for n in edges] + [(None,)],
+        "n bigint",
+    )
+    rows = ns.select(
+        "n",
+        W.count_estimate_col(F.col("n"), "java").alias("java"),
+        W.count_estimate_col(F.col("n"), "pyflink").alias("pyflink"),
+    ).collect()
+    assert len(rows) == 5001 + len(edges) + 1
+    for r in rows:
+        n = 0 if r["n"] is None else r["n"]
+        assert r["java"] == count_estimate_closed(n, "java"), r
+        assert r["pyflink"] == count_estimate_closed(n, "pyflink"), r
+
+
 def test_hop_dgim_bound(events):
     rows = W.hop_dgim(events, 60, 10).collect()
     assert len(rows) > 0
